@@ -3,9 +3,10 @@ reference's cron-ish operational loop (backfill script + webhook
 receiver + 8×/day Power BI refresh, reference README.md:511–513).
 
 ``refresh_gold`` is the scheduled batch: silver event log → current
-snapshot → every dashboard measure materialized as partition-pruned
-gold parquet + SQL views. Incremental by construction: dynamic
-partition overwrite only rewrites changed months.
+snapshot → every dashboard panel materialized as gold parquet + SQL
+views. Each refresh rewrites every gold table whole, in place
+(sources.sinks.materialize_gold); the snapshot is derived from silver
+once and every panel is built from the published snapshot.
 
 ``run_backfill_merge`` is the U2/J4 flow: merge a historical bulk load
 with live silver, latest-per-key, write the snapshot.
@@ -17,7 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.generations import read_current, write_generation
+from .operators.generations import publish_generation
 from .operators.snapshot import upsert_merge
 from .plans import gold
 from .sources.sinks import materialize_gold
@@ -28,45 +29,31 @@ def refresh_gold(
     silver_path: str,
     gold_path: str,
     prefix: str = "gold_",
-    atomic: bool = False,
 ) -> dict[str, DataFrame]:
-    """The 8×/day dashboard refresh as one Spark job.
+    """The 8×/day dashboard refresh: publish ``lead_snapshot`` (derived
+    from silver once, partitioned by account) and then every panel of
+    ``gold.PANELS``, each built from the published snapshot rather
+    than from the lazy silver plan, so no panel re-derives the
+    snapshot. Every table is a whole-table overwrite in place at
+    ``gold_path/<table>`` with a ``{prefix}<table>`` view. Returns the
+    published frames by table name.
 
-    ``atomic=False`` (default) refreshes in place with dynamic
-    partition overwrite — incremental (only changed months rewrite)
-    but a concurrent reader can catch a partition mid-rewrite.
-    ``atomic=True`` publishes each table as a fresh generation
-    directory behind a manifest (operators/generations.py): full
-    rewrite per refresh, but readers see old-or-new, never a mix —
-    the right trade for the dashboard gold layer, which is small
-    relative to silver."""
-
-    def _publish(df: DataFrame, name: str, partition_by=None) -> DataFrame:
-        path = os.path.join(gold_path, name)
-        if atomic:
-            write_generation(df, path, partition_by=partition_by)
-            out = read_current(spark, path)
-            out.createOrReplaceTempView(f"{prefix}{name}")
-            return out
-        return materialize_gold(
-            df, path, view_name=f"{prefix}{name}", partition_by=partition_by
+    In-place publishing is not read-isolated (see materialize_gold): a
+    dashboard reading during a refresh can find a table missing or
+    partial, and a refresh that fails partway leaves it missing until
+    the next one succeeds. The drift panels, which need old-or-new
+    reads, publish through generations (refresh_drift_dashboard)."""
+    snap = materialize_gold(
+        gold.lead_snapshot(spark.read.parquet(silver_path)),
+        os.path.join(gold_path, "lead_snapshot"),
+        view_name=f"{prefix}lead_snapshot",
+        partition_by=["account"],
+    )
+    out: dict[str, DataFrame] = {"lead_snapshot": snap}
+    for name, build in gold.PANELS.items():
+        out[name] = materialize_gold(
+            build(snap), os.path.join(gold_path, name), view_name=f"{prefix}{name}"
         )
-
-    silver = spark.read.parquet(silver_path)
-    snap = gold.lead_snapshot(silver)
-    out: dict[str, DataFrame] = {}
-    out["lead_snapshot"] = _publish(snap, "lead_snapshot", partition_by=["account"])
-    builders = {
-        "funnel": gold.funnel,
-        "conversion_rates": gold.conversion_rates,
-        "sales_totals": gold.sales_totals,
-        "agent_table": gold.agent_table,
-        "agent_ranking": gold.agent_ranking,
-        "monthly_trend": gold.monthly_trend,
-        "detail_listing": gold.detail_listing,
-    }
-    for name, fn in builders.items():
-        out[name] = _publish(fn(snap), name)
     return out
 
 
@@ -112,7 +99,7 @@ def run_curation_pipeline(
     6. PII redaction (map-only regexp chain on the survivors);
     7. stratified downsampling (content-hash bucket, map-side);
     8. deterministic train/val/test split;
-    9. write partitioned by split (dynamic partition overwrite).
+    9. write partitioned by split (sources.sinks.materialize_gold).
 
     Stage order is deliberate for scale: the cheap map-side gates run
     first so the shuffling stages (3, 4) see the smallest possible
@@ -415,18 +402,16 @@ def run_curation_pipeline(
                 )
         finally:
             curated.unpersist()
+        out = spark.read.parquet(out_path)
     else:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        curated.write.mode("overwrite").partitionBy("split").parquet(out_path)
+        out = materialize_gold(curated, out_path, partition_by=["split"])
     # the write above is the last action over the near-dup candidates;
     # release the MinHash signature cache they pinned (and the soft-
     # dedup path's pinned labeled frame)
     release_cached(near)
     if soft_dedup:
         labeled.unpersist()
-    return spark.read.parquet(out_path)
+    return out
 
 
 def refresh_drift_dashboard(
@@ -435,45 +420,36 @@ def refresh_drift_dashboard(
     gold_path: str,
     ref_weeks: int = 4,
     prefix: str = "gold_",
-    atomic: bool = True,
 ) -> dict[str, DataFrame]:
     """Materialize the rolling drift PANEL as gold tables (round 13 —
     the refresh_gold posture applied to the monitoring family): the
     numeric per-(series, week) KS/W1/PSI panel
     (quality.rolling_drift over integer-floored event values) and the
     weekly categorical mix panel (quality.rolling_chi2 over
-    event_type), each published behind the generation manifest by
-    default — dashboards read old-or-new, never a mid-rewrite mix,
-    and both frames are week-grain-small so the full rewrite is the
-    right trade. Registers ``{prefix}drift_panel`` /
-    ``{prefix}mix_panel`` temp views like the BI gold layer. Returns
-    the published frames."""
+    event_type), each published behind the generation manifest
+    (operators/generations.publish_generation) — dashboards read
+    old-or-new, never a mid-rewrite mix, and both frames are
+    week-grain-small so the full rewrite is the right trade. Registers
+    ``{prefix}drift_panel`` / ``{prefix}mix_panel`` temp views like
+    the BI gold layer. Returns the published frames."""
     from pyspark.sql import functions as F
 
     from .operators.quality import rolling_chi2, rolling_drift
 
-    def _publish(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(gold_path, name)
-        if atomic:
-            write_generation(df, path)
-            out = read_current(spark, path)
-            out.createOrReplaceTempView(f"{prefix}{name}")
-            return out
-        return materialize_gold(df, path, view_name=f"{prefix}{name}")
-
-    out: dict[str, DataFrame] = {}
-    out["drift_panel"] = _publish(
-        rolling_drift(
+    panels = {
+        "drift_panel": rolling_drift(
             events.withColumn("value", F.floor("value")),
             "value",
             ref_weeks=ref_weeks,
         ),
-        "drift_panel",
-    )
-    out["mix_panel"] = _publish(
-        rolling_chi2(events, ref_weeks=ref_weeks), "mix_panel"
-    )
-    return out
+        "mix_panel": rolling_chi2(events, ref_weeks=ref_weeks),
+    }
+    return {
+        name: publish_generation(
+            df, os.path.join(gold_path, name), f"{prefix}{name}"
+        )
+        for name, df in panels.items()
+    }
 
 
 def run_packing_pipeline(

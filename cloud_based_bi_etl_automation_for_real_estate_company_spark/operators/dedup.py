@@ -385,13 +385,13 @@ def connected_components_star(
     # each round's stats/mid/cur frames die as soon as their single
     # downstream consumer has materialized — release their blocks then,
     # instead of leaking three checkpoints per contraction round until
-    # JVM GC. mid_{r-1} is dead once cur_{r-1} has materialized (the
-    # local-finish count or this round's stats job, whichever runs
-    # first); stats_r and cur_{r-1} are dead once mid_r materialized.
+    # JVM GC. mid_{r-1} is dead once cur_{r-1} has materialized (its
+    # eager localCheckpoint); stats_r and cur_{r-1} are dead once mid_r
+    # materialized.
     prev_mid = None
     for _ in range(max_iter):
         if local_finish_max_edges and cur.count() <= local_finish_max_edges:
-            release_checkpoint(prev_mid)  # cur materialized by the count
+            release_checkpoint(prev_mid)  # cur is already materialized
             return _local_cc(cur, spark, id_type)
         # ONE flagged pass over the symmetrized canon list computes
         # the fixpoint degree stats AND the large star's neighborhood
@@ -411,8 +411,9 @@ def connected_components_star(
             )
             .localCheckpoint(eager=True)
         )
-        # the stats job materialized cur's lazy checkpoint, so the
-        # previous round's mid has no live reader left
+        # cur was checkpointed eagerly (localCheckpoint's default)
+        # when it was built from mid, so the previous round's mid has
+        # no live reader left
         release_checkpoint(prev_mid)
         prev_mid = None
         # star forest ⟺ no child has 2 parents and no node is both

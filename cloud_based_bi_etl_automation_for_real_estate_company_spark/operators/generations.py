@@ -41,20 +41,14 @@ def current_generation(table_path: str) -> int | None:
 
 
 def write_generation(
-    df: DataFrame,
-    table_path: str,
-    keep_generations: int = 2,
-    partition_by: list[str] | None = None,
+    df: DataFrame, table_path: str, keep_generations: int = 2
 ) -> int:
     """Write ``df`` as the next generation and atomically publish it.
     Returns the new generation number."""
     cur = current_generation(table_path)
     nxt = 0 if cur is None else cur + 1
     gen_dir = os.path.join(table_path, f"gen-{nxt}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(gen_dir)
+    df.write.mode("overwrite").parquet(gen_dir)
 
     os.makedirs(table_path, exist_ok=True)
     tmp = _manifest_path(table_path) + ".tmp"
@@ -76,6 +70,16 @@ def read_current(spark: SparkSession, table_path: str) -> DataFrame:
     if gen is None:
         raise FileNotFoundError(f"no published generation under {table_path}")
     return spark.read.parquet(os.path.join(table_path, f"gen-{gen}"))
+
+
+def publish_generation(df: DataFrame, table_path: str, view_name: str) -> DataFrame:
+    """Publish ``df`` as the table's next generation, read the
+    published generation back and re-point ``view_name`` at it.
+    Returns the published frame."""
+    write_generation(df, table_path)
+    out = read_current(df.sparkSession, table_path)
+    out.createOrReplaceTempView(view_name)
+    return out
 
 
 def compact_generation(

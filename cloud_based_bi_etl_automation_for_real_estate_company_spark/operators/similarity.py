@@ -33,6 +33,10 @@ from ..functions.vectors import as_double, cosine, dot, sign_bucket
 from .cacheutil import release_checkpoint
 from .partitioning import spread
 
+# nsw_topk's broadcast budget: a query batch whose estimated per-hop
+# state exceeds this many rows joins without broadcast hints
+NSW_BCAST_ROWS = 4_000_000
+
 
 def _sim(qcol: str, bcol: str):
     return F.round(cosine(as_double(qcol), as_double(bcol)), 6)
@@ -1359,7 +1363,7 @@ def nsw_topk(
     query batch too large for that posture, fall back to brute/IVF
     routing, not beam search — and since round 16 the broadcast hints
     are GUARDED (r15 ADVICE): a batch whose estimated per-hop state
-    exceeds ``SPARK_GRAFT_NSW_BCAST_ROWS`` (default 4M rows) degrades
+    exceeds ``NSW_BCAST_ROWS`` (4M rows) degrades
     to planner-chosen joins instead of failing on the broadcast cap.
     Recall is audited
     (≥ floor vs brute force) in tests and the x_ann_hnsw gate; like
@@ -1401,8 +1405,7 @@ def nsw_topk(
     # overcounts (every hop fully fresh).
     n_q = q.count()
     est_rows = n_q * beam * (M + 1) * (hops + max_level + 1)
-    bcast_budget = int(os.environ.get("SPARK_GRAFT_NSW_BCAST_ROWS", "4000000"))
-    hint = F.broadcast if est_rows <= bcast_budget else (lambda df: df)
+    hint = F.broadcast if est_rows <= NSW_BCAST_ROWS else (lambda df: df)
     bvec = base.select(F.col(id_col).alias("node"), F.col(vec_col).alias("__b"))
 
     def score(cand: DataFrame) -> DataFrame:

@@ -190,14 +190,23 @@ def detail_listing(snapshot: DataFrame, limit: int = 100) -> DataFrame:
     )
 
 
+# The panels a gold refresh publishes, by table name: each is built from
+# the lead snapshot alone (goal_progress also needs the goals table, so
+# it is not published).
+PANELS = {
+    "funnel": funnel,
+    "conversion_rates": conversion_rates,
+    "sales_totals": sales_totals,
+    "agent_table": agent_table,
+    "agent_ranking": agent_ranking,
+    "monthly_trend": monthly_trend,
+    "detail_listing": detail_listing,
+}
+
+
 def register_views(snapshot: DataFrame, prefix: str = "gold_") -> None:
     """Expose the measure library to SQL consumers as temp views
     (the Spark equivalent of the Power BI dataset surface)."""
     snapshot.createOrReplaceTempView(f"{prefix}lead_snapshot")
-    funnel(snapshot).createOrReplaceTempView(f"{prefix}funnel")
-    conversion_rates(snapshot).createOrReplaceTempView(f"{prefix}conversion_rates")
-    sales_totals(snapshot).createOrReplaceTempView(f"{prefix}sales_totals")
-    agent_table(snapshot).createOrReplaceTempView(f"{prefix}agent_table")
-    agent_ranking(snapshot).createOrReplaceTempView(f"{prefix}agent_ranking")
-    monthly_trend(snapshot).createOrReplaceTempView(f"{prefix}monthly_trend")
-    detail_listing(snapshot).createOrReplaceTempView(f"{prefix}detail_listing")
+    for name, build in PANELS.items():
+        build(snapshot).createOrReplaceTempView(f"{prefix}{name}")

@@ -37,13 +37,21 @@ def materialize_gold(
     view_name: str | None = None,
     partition_by: list[str] | None = None,
 ) -> DataFrame:
-    """S11 — gold refresh: overwrite the materialized table and
-    re-register its view. Dynamic partition overwrite only rewrites the
-    partitions present in ``df`` — an incremental refresh touches one
-    month's directory, not the whole table."""
+    """S11 — gold refresh: publish ``df`` in place as the whole table
+    and re-register its view. Every caller passes the full table, so
+    the overwrite is whole-table (static) whatever the session's
+    partition-overwrite mode: a partition absent from ``df`` — an
+    account whose leads were all deleted — is removed, not kept
+    stale. Returns the published table read back from ``path``.
+
+    The refresh is not read-isolated: the old table is deleted before
+    the write job runs (and that job includes computing ``df``), so a
+    concurrent reader sees a missing or partial table for the whole
+    job, and a failed refresh leaves the table missing. Tables that
+    need old-or-new reads publish through
+    ``operators.generations.publish_generation`` instead."""
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    writer = df.write.mode("overwrite")
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "static")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

@@ -1,5 +1,5 @@
 """S10/S11 sink tests: schema-declared bulk load, gold materialization
-with dynamic partition overwrite."""
+as a whole-table overwrite."""
 
 from __future__ import annotations
 
@@ -36,19 +36,29 @@ def test_bulk_load_csv_with_declared_schema(spark, tmp_path):
     assert rows[2]["lead_id"] is None  # malformed cell → NULL, row kept
 
 
-def test_materialize_gold_dynamic_partition_overwrite(spark, tmp_path):
+def test_materialize_gold_whole_table_overwrite(spark, tmp_path):
     out = str(tmp_path / "gold")
     df1 = spark.createDataFrame(
-        [("2025-01", 10), ("2025-02", 20)], "month string, n int"
+        [("office_a", 10), ("office_b", 20)], "account string, n int"
     )
-    materialize_gold(df1, out, view_name="gold_t", partition_by=["month"])
+    materialize_gold(df1, out, view_name="gold_t", partition_by=["account"])
     assert spark.sql("SELECT sum(n) FROM gold_t").collect()[0][0] == 30
 
-    # refresh only February — January's partition must survive
-    df2 = spark.createDataFrame([("2025-02", 25)], "month string, n int")
-    refreshed = materialize_gold(df2, out, view_name="gold_t", partition_by=["month"])
-    got = {r["month"]: r["n"] for r in refreshed.collect()}
-    assert got == {"2025-01": 10, "2025-02": 25}
+    # the new table has no office_b rows: its partition must be gone,
+    # even when the session defaults to dynamic partition overwrite
+    df2 = spark.createDataFrame([("office_a", 15)], "account string, n int")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        refreshed = materialize_gold(
+            df2, out, view_name="gold_t", partition_by=["account"]
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert {r["account"]: r["n"] for r in refreshed.collect()} == {"office_a": 15}
+    assert spark.sql("SELECT sum(n) FROM gold_t").collect()[0][0] == 15
+    assert not (tmp_path / "gold" / "account=office_b").exists()
 
 
 def test_compact_small_files(spark, tmp_path):

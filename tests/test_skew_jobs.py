@@ -51,31 +51,53 @@ def test_salted_join_matches_plain_join(spark):
     assert set(salted.columns) == {"user_id", "event_id", "value", "name"}
 
 
-@pytest.mark.slow  # round 16: heavy leg, slow tier (see pytest.ini)
-def test_refresh_gold_job(spark, tmp_path):
+def _silver_event(i, account, lead_id, step, amount, email, event="lead.step.changed"):
     import datetime as dt
     from decimal import Decimal
 
+    t0 = dt.datetime(2025, 8, 1, 10, 0) + dt.timedelta(minutes=i)
+    return (
+        i, account, event, "s", True, 1, 200, t0, lead_id, f"L{lead_id}",
+        "open", step, 1, "V",
+        Decimal(amount) if amount is not None else None,
+        t0, t0, email, "u", None, None, None, "{}",
+    )
+
+
+def _write_silver(spark, rows, path, mode="errorifexists"):
     from cloud_based_bi_etl_automation_for_real_estate_company_spark.schemas import (
         SILVER_EVENT_SCHEMA,
     )
 
-    t0 = dt.datetime(2025, 8, 1, 10, 0)
-    rows = [
-        (1, "office_a", "lead.step.changed", "s", True, 1, 200, t0, 1, "L1",
-         "open", "Firmados", 1, "V", Decimal("1000.00"), t0, t0, "a@x",
-         "u", None, None, None, "{}"),
-        (2, "office_b", "lead.step.changed", "s", True, 1, 200, t0, 2, "L2",
-         "open", "Ingresados", 1, "V", Decimal("500.00"), t0, t0, "b@x",
-         "u", None, None, None, "{}"),
-    ]
+    spark.createDataFrame(rows, SILVER_EVENT_SCHEMA).write.mode(
+        mode
+    ).partitionBy("account").parquet(path)
+
+
+def _bag(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+@pytest.mark.slow  # round 16: heavy leg, slow tier (see pytest.ini)
+def test_refresh_gold_job(spark, tmp_path):
+    from cloud_based_bi_etl_automation_for_real_estate_company_spark.plans import (
+        gold,
+    )
+
     silver_path = str(tmp_path / "silver")
-    spark.createDataFrame(rows, SILVER_EVENT_SCHEMA).write.partitionBy(
-        "account"
-    ).parquet(silver_path)
+    _write_silver(
+        spark,
+        [
+            _silver_event(1, "office_a", 1, "Firmados", "1000.00", "a@x"),
+            _silver_event(2, "office_b", 2, "Ingresados", "500.00", "b@x"),
+        ],
+        silver_path,
+    )
 
     out = jobs.refresh_gold(spark, silver_path, str(tmp_path / "gold"))
-    assert set(out) >= {"lead_snapshot", "funnel", "sales_totals", "agent_table"}
+    assert set(out) == {"lead_snapshot", *gold.PANELS}
     assert spark.sql("SELECT Firmados FROM gold_funnel").collect()[0][0] == 1
     assert (
         spark.sql("SELECT monto_colocado FROM gold_sales_totals").collect()[0][0]
@@ -85,22 +107,49 @@ def test_refresh_gold_job(spark, tmp_path):
     snap = spark.read.parquet(str(tmp_path / "gold" / "lead_snapshot"))
     assert snap.filter(F.col("account") == "office_a").count() == 1
 
-    # atomic mode: same results, published behind a generation manifest
-    from cloud_based_bi_etl_automation_for_real_estate_company_spark.operators import (
-        generations as G,
-    )
+    # every published panel equals its builder over the silver snapshot
+    want_snap = gold.lead_snapshot(spark.read.parquet(silver_path))
+    for name, build in gold.PANELS.items():
+        want = build(want_snap)
+        assert out[name].columns == want.columns, name
+        assert _bag(out[name]) == _bag(want), name
 
-    agold = str(tmp_path / "gold_atomic")
-    jobs.refresh_gold(spark, silver_path, agold, atomic=True)
-    assert G.current_generation(agold + "/funnel") == 0
-    assert spark.sql("SELECT Firmados FROM gold_funnel").collect()[0][0] == 1
-    # re-refresh bumps the generation; views re-point to the new one
-    jobs.refresh_gold(spark, silver_path, agold, atomic=True)
-    assert G.current_generation(agold + "/funnel") == 1
-    assert spark.sql("SELECT Firmados FROM gold_funnel").collect()[0][0] == 1
-    # partitioned snapshot generation keeps partition pruning
-    snap2 = G.read_current(spark, agold + "/lead_snapshot")
-    assert snap2.filter(F.col("account") == "office_a").count() == 1
+
+def test_refresh_gold_drops_fully_deleted_account(spark, tmp_path):
+    """An account whose leads were all deleted since the last refresh
+    leaves no rows in the published snapshot, nor in any panel built
+    from it."""
+    silver_path = str(tmp_path / "silver")
+    gold_path = str(tmp_path / "gold")
+    _write_silver(
+        spark,
+        [
+            _silver_event(1, "office_a", 1, "Firmados", "1000.00", "a@x"),
+            _silver_event(2, "office_b", 2, "Firmados", "500.00", "b@x"),
+            _silver_event(3, "office_b", 3, "Ingresados", "200.00", "b@x"),
+        ],
+        silver_path,
+    )
+    jobs.refresh_gold(spark, silver_path, gold_path)
+
+    _write_silver(
+        spark,
+        [
+            _silver_event(10 + lead, "office_b", lead, None, None, None,
+                          event="lead.deleted")
+            for lead in (2, 3)
+        ],
+        silver_path,
+        mode="append",
+    )
+    out = jobs.refresh_gold(spark, silver_path, gold_path)
+
+    snap = spark.read.parquet(str(tmp_path / "gold" / "lead_snapshot"))
+    assert snap.filter(F.col("account") == "office_b").count() == 0
+    assert [r["lead_id"] for r in snap.collect()] == [1]
+    assert not (tmp_path / "gold" / "lead_snapshot" / "account=office_b").exists()
+    assert out["sales_totals"].collect()[0]["monto_colocado"] == 1000.0
+    assert {r["asesor"] for r in out["agent_table"].collect()} == {"a@x", "Total"}
 
 
 def test_aqe_splits_skewed_join(spark):
